@@ -754,16 +754,6 @@ object MaterializedView {
     try out.write(vs.mkString(",").getBytes("UTF-8")) finally out.close()
   }
 
-  /** The (factV, dimV) pair the view's CURRENT version consumed;
-    * (0, 0) = never refreshed (or the marker expired). */
-  def joinRefreshedAgainst(spark: SparkSession, viewRoot: String)
-  : (Long, Long) = {
-    starRefreshedAgainst(spark, viewRoot, 2) match {
-      case Seq(a, b) => (a, b)
-      case _ => (0L, 0L)
-    }
-  }
-
   /** Every consumed source version (fact first), or all zeros. */
   def starRefreshedAgainst(spark: SparkSession, viewRoot: String,
       arity: Int): Seq[Long] = {

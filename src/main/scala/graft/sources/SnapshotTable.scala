@@ -245,8 +245,8 @@ object SnapshotTable {
     val p = new Path(manifestsDir(root), v.toString)
     val content = deltaContent(f, root, entries, schema, parent)
       .getOrElse(fullContent(entries, schema))
-    val out = f.create(p, false) // uncontended: only the claim holder
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+    // uncontended: only the claim holder
+    writeSmall(f, p, content.getBytes("UTF-8"), overwrite = false)
   }
 
   private val MaxDeltaDepth = 32
@@ -958,7 +958,7 @@ object SnapshotTable {
         // old path's output committer) already had
         fs(spark, root).delete(seg, true)
         throw e
-    }
+    } finally hc.destroy() // per-job: tasks are done with it
     if (stats.isEmpty) {
       // an all-empty batch: df.write.parquet leaves one empty file so
       // the segment stays readable — mirror that exactly
@@ -1518,6 +1518,23 @@ object SnapshotTable {
       catch { case _: java.io.IOException => false }
     }
 
+  /** Write a small metadata file whole. Local paths go through NIO like
+    * [[atomicCreate]]: Hadoop's local `create` forks `chmod` for the
+    * file and its `.crc` when the native library is absent, which costs
+    * more than the write. Checksummed readers accept a file without a
+    * `.crc`. */
+  private def writeSmall(f: FileSystem, p: Path, bytes: Array[Byte],
+      overwrite: Boolean): Unit =
+    if (f.getScheme == "file") {
+      import java.nio.file.{Files, Paths, StandardOpenOption => O}
+      val local = Paths.get(p.toUri.getPath)
+      if (overwrite) Files.write(local, bytes)
+      else Files.write(local, bytes, O.CREATE_NEW, O.WRITE)
+    } else {
+      val out = f.create(p, overwrite)
+      try out.write(bytes) finally out.close()
+    }
+
   /** The commit record — its existence IS the commit. Uncontended: only
     * the holder of `N.claim` ever writes `N`. Re-verifies the claim AND
     * the referenced files first: if a concurrent `vacuum` reaped either
@@ -1551,10 +1568,9 @@ object SnapshotTable {
     // committed version transiently invisible to versions(), and
     // (b) the record's mtime — the clock commitTime/expire-older-than
     // key off — is set once and never reset.
-    try {
-      val out = f.create(new Path(commitsDir(root), s"$v.op"), true)
-      try out.write(op.getBytes("UTF-8")) finally out.close()
-    } catch { case _: java.io.IOException => () } // advisory only
+    try writeSmall(f, new Path(commitsDir(root), s"$v.op"),
+      op.getBytes("UTF-8"), overwrite = true)
+    catch { case _: java.io.IOException => () } // advisory only
     val record = new Path(commitsDir(root), v.toString)
     require(atomicCreate(f, record),
       s"commit record $v already exists — claim protocol violated")
@@ -2316,7 +2332,7 @@ object SnapshotTable {
           fs(spark, root).delete(seg, true)
           if (isNull) throw new IllegalArgumentException(NullKeyMsg)
           throw e
-      }
+      } finally hc.destroy()
     stats.map { s =>
       FileEntry(s"_data/${seg.getName}/${s.name}", Some(fields.head.name),
         s.lo, s.hi, statsNulls = Some(s.nulls),
@@ -2561,7 +2577,7 @@ object SnapshotTable {
         // leaves no committed-task files squatting in the segment
         fs(spark, root).delete(seg, true)
         throw e
-    }
+    } finally hc.destroy()
     stats.map { s =>
       FileEntry(s"_data/${seg.getName}/${s.name}", Some(keys.head._1),
         s.lo, s.hi, statsNulls = Some(s.nulls),
@@ -5075,13 +5091,15 @@ object SnapshotTable {
         val f = fs(spark, root)
         addedData.map(e => entryBytes(f, root, e)).sum
       }
-      tombProbe match {
-        case Some((key, probes))
-            if ins.columns.contains(key) && addedBytes >= splitMinBytes =>
+      // the tombstone key may differ in case from the table's column
+      val probeCol = tombProbe.flatMap { case (key, probes) =>
+        ins.columns.find(_.equalsIgnoreCase(key)).map(_ -> probes) }
+      probeCol match {
+        case Some((name, probes)) if addedBytes >= splitMinBytes =>
           val vals = probes.filter(_ != null).toSeq
           val inT =
             if (vals.isEmpty) lit(false)
-            else col(bq(key)).isin(vals: _*) <=> lit(true)
+            else col(bq(name)).isin(vals: _*) <=> lit(true)
           val insIn = ins.filter(inT)
           val insOut = ins.filter(!inT)
           return insOut.unionByName(insIn.exceptAll(del))

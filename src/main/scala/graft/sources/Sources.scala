@@ -97,12 +97,6 @@ object Sources {
       col("value").cast("string").as("value"),
       col("topic"), col("partition"), col("offset"), col("timestamp"))
 
-  /** Text-file stream with the same downstream contract as Kafka value
-    * strings (one JSON event per line). */
-  def fileStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.format("text").load(path)
-      .withColumnRenamed("value", "value")
-
   // ---- batch IO (S4/S5, multi-format) ----
 
   def writeAs(df: DataFrame, format: String, path: String): Unit =

@@ -305,6 +305,11 @@ private[connector] class GraftDeltaBatchWrite(root: String,
   // SerializableHadoopConf)
   private val hconf =
     Some(SerializableHadoopConf.broadcast(SparkSession.active))
+  // destroyed when the job ends: commit runs after every task finished,
+  // and Spark calls abort after a failed commit, so release only once
+  private var hconfLive = true
+  private def releaseHconf(): Unit =
+    if (hconfLive) { hconfLive = false; hconf.foreach(_.destroy()) }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DeltaWriterFactory = new GraftDeltaWriterFactory(dataSeg.toString,
@@ -316,6 +321,7 @@ private[connector] class GraftDeltaBatchWrite(root: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
+    releaseHconf()
     val dataFiles = messages.toSeq.collect {
       case GraftDeltaTaskFiles(ds, _) => ds.map { case (name, b, st) =>
         (s"_data/${dataSeg.getName}/$name", b, st) }
@@ -363,6 +369,7 @@ private[connector] class GraftDeltaBatchWrite(root: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    releaseHconf()
     val spark = SparkSession.active
     SnapshotTable.fs(spark, root).delete(dataSeg, true)
     SnapshotTable.fs(spark, root).delete(tombSeg, true)

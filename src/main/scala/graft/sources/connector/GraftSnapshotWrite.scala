@@ -190,6 +190,11 @@ private[connector] class GraftBatchWrite(root: String,
   // must ship only the broadcast handle (see SerializableHadoopConf)
   private val hconf =
     Some(SerializableHadoopConf.broadcast(SparkSession.active))
+  // destroyed when the job ends: commit runs after every task finished,
+  // and Spark calls abort after a failed commit, so release only once
+  private var hconfLive = true
+  private def releaseHconf(): Unit =
+    if (hconfLive) { hconfLive = false; hconf.foreach(_.destroy()) }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DataWriterFactory = (bucketSpec, partitionSpec) match {
@@ -207,6 +212,7 @@ private[connector] class GraftBatchWrite(root: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
+    releaseHconf()
     // sorted: commit-message arrival order is task-completion order,
     // but manifest order should be partition order (see stageSegment)
     val files = messages.toSeq.flatMap {
@@ -249,6 +255,7 @@ private[connector] class GraftBatchWrite(root: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    releaseHconf()
     val spark = SparkSession.active
     SnapshotTable.fs(spark, root).delete(seg, true)
   }

@@ -126,9 +126,17 @@ object EventPipeline {
 
   /** P2–P9: flatten to the 26-column storage row
     * (`schema.py:57-95`, `event_processor.py:48-166`), including payload
-    * JSONPath extracts from the raw JSON (P4), quality flags (P8), and
-    * processing-time partition columns (P5). */
-  def flatten(parsed: DataFrame): DataFrame =
+    * extracts (P4), quality flags (P8), and processing-time partition
+    * columns (P5).
+    *
+    * The six payload fields are read from the map that [[parse]] already
+    * decoded, not re-extracted from `raw_json` with `get_json_object` as
+    * the reference does: that would tokenise every event once more per
+    * field. The saving matters on the driver too, since Spark evaluates
+    * this projection there while planning an in-memory batch. Only
+    * `payload_json` still re-reads the raw line, for the payload text. */
+  def flatten(parsed: DataFrame): DataFrame = {
+    val payload = col("event.payload")
     parsed.select(
       col("event.id").as("event_id"),
       col("event.type").as("event_type"),
@@ -147,20 +155,18 @@ object EventPipeline {
       col("event.actor.id").isNotNull.as("has_actor"),
       col("event.repo.id").isNotNull.as("has_repo"),
       col("event.org.id").isNotNull.as("has_org"),
-      get_json_object(col("raw_json"), "$.payload.action").as("action"),
-      get_json_object(col("raw_json"), "$.payload.ref").as("ref"),
-      get_json_object(col("raw_json"), "$.payload.ref_type").as("ref_type"),
-      get_json_object(col("raw_json"), "$.payload.master_branch")
-        .as("master_branch"),
-      get_json_object(col("raw_json"), "$.payload.description")
-        .as("description"),
-      get_json_object(col("raw_json"), "$.payload.pusher_type")
-        .as("pusher_type"),
+      payload.getItem("action").as("action"),
+      payload.getItem("ref").as("ref"),
+      payload.getItem("ref_type").as("ref_type"),
+      payload.getItem("master_branch").as("master_branch"),
+      payload.getItem("description").as("description"),
+      payload.getItem("pusher_type").as("pusher_type"),
       get_json_object(col("raw_json"), "$.payload").as("payload_json"),
       date_format(col("event.created_at").cast("timestamp"), "yyyy-MM-dd")
         .as("processing_date"),
       hour(col("event.created_at").cast("timestamp"))
         .as("processing_hour"))
+  }
 
   /** P7: conjunctive data-quality filter (`event_processor.py:117-121`). */
   def qualityFilter(flat: DataFrame): DataFrame =

@@ -54,6 +54,49 @@ class EventPipelineSpec extends SparkSpec {
     assert(r.getAs[Int]("processing_hour") == 10)
   }
 
+  test("payload fields read from the parsed map equal the reference's " +
+      "get_json_object extracts (P4)") {
+    val fields = Seq("action", "ref", "ref_type", "master_branch",
+      "description", "pusher_type")
+    def allFields(v: String): String =
+      fields.map(f => s""""$f": $v""").mkString("{", ", ", "}")
+    val values = Seq(
+      "\"opened\"",
+      "\"a\\\"b\\\\né\\t\"",
+      "1.50", "1e5", "-0",
+      "true",
+      "null",
+      """{"k": [1, {"x": null}], "s": "v"}""",
+      """[1, "two", null, 1.50]""",
+      "\"\"")
+    val payloads = values.map(allFields) ++ Seq(
+      """{"other": "x"}""",
+      fields.map(f => s""""${f.toUpperCase}": "x"""")
+        .mkString("{", ", ", "}"),
+      fields.map(f => s""""$f": "first", "$f": "second"""")
+        .mkString("{", ", ", "}"),
+      "null", "\"text\"", "[1, 2]", "42", "{}")
+    val noPayload =
+      """{"id": "none", "type": "PushEvent", "actor": null, "repo": null,
+        |"org": null, "public": true, "created_at": "2024-01-01T10:00:00Z",
+        |"processed_at": "2024-01-01T10:00:00Z"}"""
+        .stripMargin.replace("\n", " ")
+    val lines = payloads.zipWithIndex.map { case (p, i) =>
+      ev(i.toString, payload = p) } :+ noPayload
+    val raw = lines.toDF("value")
+
+    // rows are (event id, six fields); the id is the case's index
+    val got = EventPipeline.flatten(EventPipeline.parse(raw))
+      .select(col("event_id") +: fields.map(col): _*).collect().toSet
+    val want = raw.select(get_json_object(col("value"), "$.id") +:
+      fields.map(f => get_json_object(col("value"), s"$$.payload.$f")): _*)
+      .collect().toSet
+    // every case survives parse, so no case is compared vacuously
+    assert(got.size == lines.size)
+    assert(got == want, s"got, not wanted: ${got -- want}\n" +
+      s"wanted, not got: ${want -- got}")
+  }
+
   test("unknown event type categorizes as other (P6)") {
     val flat = EventPipeline.pipeline(
       Seq(ev("1", typ = "MysteryEvent")).toDF("value"))

@@ -1575,6 +1575,32 @@ class SnapshotTableSpec extends SparkSpec {
     assert(del.count(t => t._1.exists(k => { val v = k.asInstanceOf[Int]; v >= 41 && v <= 80 })) == 40)
   }
 
+  test("the diff's key-membership split engages when the tombstone " +
+      "key differs in case from the table column") {
+    val root = tmpRoot()
+    SnapshotTable.commit(spark, root,
+      (1 to 2000).map(i => (i, i * 1.0)).toDF("k", "x"),
+      clusterKey = Some("k"))
+    // the batch names the key column "K"; the table calls it "k"
+    SnapshotTable.mergeOnRead(spark, root,
+      ((1 to 20).map(i => (i, -1.0)) ++ (5001 to 5010).map(i => (i, 9.0)))
+        .toDF("K", "x"), "K")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def splits(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.exists(_.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.In])))
+    val classic = SnapshotTable.diff(spark, root, 1L, 2L)
+    spark.conf.set("spark.graft.diff.splitMinBytes", "0")
+    val split =
+      try SnapshotTable.diff(spark, root, 1L, 2L)
+      finally spark.conf.unset("spark.graft.diff.splitMinBytes")
+    assert(!splits(classic), "below the size gate the diff must not split")
+    assert(splits(split), "a case-mismatched key must still split")
+    assert(rows(split) == rows(classic))
+    assert(rows(classic).size == 50)
+  }
+
   test("inline staging honors spark.sql.files.maxRecordsPerFile: a " +
       "partition past the cap rolls to ordered sibling files with " +
       "their own stats, and reads/pruning see the identical table") {
